@@ -261,11 +261,10 @@ def main():
                 if name.split("_")[0] in ("q62", "q121", "q124", "q136", "q140") \
                         and len(e) == 0:
                     print("  note: EMPTY oracle here is the CC convergence "
-                          "canary firing — a component exceeded the "
-                          "OracleCcRounds=12 diameter ceiling (~4096; "
-                          "Dedup.scala scaladoc). The engine's labels are "
-                          "likely CORRECT; bump OracleCcRounds (each +1 "
-                          "round doubles covered diameter).")
+                          "canary firing — label propagation did not "
+                          "converge within OracleCcRounds (Dedup.scala "
+                          "scaladoc). The engine's labels are likely "
+                          "CORRECT; bump OracleCcRounds.")
             else:
                 k = next(i for i in range(len(g)) if g[i] != e[i])
                 print(f"FAIL {name}: first diff at row {k}:")

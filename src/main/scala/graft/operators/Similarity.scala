@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.OracleRound.{floorRound, floorRoundSql}
 import graft.functions.CacheScope.Ops
+import graft.functions.FamilyIndex
 import graft.sources.Tables
 
 /** Similarity search over `embeddings` (SURVEY.md §7.1 B4):
@@ -282,31 +283,21 @@ object Similarity {
     cent
   }
 
-  /** Trained-centroid memo, keyed by canonical fixture dir: an ANN
-    * index is trained ONCE and then served many times, so the index
-    * queries (q30/q132) reuse a single Lloyd run per corpus instead
-    * of re-training per query. Sound to cache: training is fully
-    * deterministic (seeds are vec_id < k, means are DECIMAL sums),
-    * and the entry is plain driver values — O(k·d) doubles — so it
-    * survives `spark.catalog.clearCache()` and never pins executor
-    * memory. q77 always re-trains (it IS the training benchmark) and
-    * refreshes the memo with the identical value. Keyed by the corpus
-    * FINGERPRINT (path + file sizes/mtimes — [[graft.sources.Tables.fingerprint]]),
-    * not the bare path: if the data at the path is regenerated within
-    * a session the memo re-trains instead of serving stale centroids. */
-  private val centroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]]()
-
-  private[graft] def trainedCentroids(spark: SparkSession, sfDir: String): Seq[(Long, Seq[Double])] = {
-    val key = graft.sources.Tables.fingerprint(sfDir, Seq("embeddings"))
-    centroidMemo.computeIfAbsent(key, _ => {
+  /** Trained-centroid memo ([[graft.functions.FamilyIndex]] value
+    * kind): an ANN index is trained ONCE per corpus fingerprint and
+    * then served many times, so the index queries (q30/q132) reuse a
+    * single Lloyd run instead of re-training per query. Sound to
+    * cache: training is fully deterministic (seeds are vec_id < k,
+    * means are DECIMAL sums), and the entry is plain driver values —
+    * O(k·d) doubles. */
+  private[graft] val trainedCentroids = FamilyIndex.value("kmeans-centroids", "embeddings") {
+    (spark, sfDir) =>
       // No corpus persist (r12): with the in-driver loop the corpus
       // is read exactly twice (count + sample/seed collects share a
       // scan each) — nothing re-reads it, so a persist would pin
       // corpus-scale memory at 100 TB to accelerate nothing.
       val n = vecs(spark, sfDir)
       lloydTrain(n, n.count())
-    })
   }
 
   /** The `ivf-assign` family index: the (vec_id, v, cluster) posting
@@ -328,18 +319,14 @@ object Similarity {
     * via [[centStructs]]), so serving it changes no consumer's
     * exchange count — it only deletes their repeated scan+argmax
     * subtrees. */
-  private[graft] def ivfAssignIndex(spark: SparkSession, sfDir: String): DataFrame =
-    graft.functions.FamilyIndex.of("ivf-assign", spark,
-      Tables.fingerprint(sfDir, Seq("embeddings"))) { () =>
+  private[graft] val ivfAssignIndex = FamilyIndex.relation("ivf-assign", "embeddings") {
+    (spark, sfDir) =>
       val cents = trainedCentroids(spark, sfDir)
-      val asg = cvecs(spark, sfDir)
+      cvecs(spark, sfDir)
         .withColumn("best",
           graft.functions.CentroidBest.centroid_negcos_best(cents, col("v")))
         .select(col("vec_id"), col("v"), col("best.c_id").as("cluster"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      asg.count() // eager — consumers read posting lists, not parquet
-      asg
-    }
+  }
 
   /** Unrolled Lloyd-iteration CTE chain over base relation `$base`
     * (must expose vec_id, v with len(v) = `dim`) — defines
@@ -1067,9 +1054,8 @@ object Similarity {
     * these cells via [[trainedCentroids]] — SURVEY §2.6 flags this
     * re-train step). The loop is [[lloydTrain]]; at 100 TB the
     * per-iteration cost is one scan + one k·d-sized shuffle; nothing
-    * grows with N except the scans. Always re-trains (this IS the
-    * training benchmark) and refreshes the shared memo with the
-    * identical deterministic value. */
+    * grows with N except the scans. Always re-trains: this IS the
+    * training benchmark. */
   def q77(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.OracleRound.{floorRound, exactSum}
     // No corpus persist (r12): with the in-driver training loop every
@@ -1079,7 +1065,6 @@ object Similarity {
     // memory at 100 TB (the q68 no-corpus-cache lesson).
     val n = vecs(spark, sfDir)
     val cent = lloydTrain(n, n.count())
-    centroidMemo.put(graft.sources.Tables.fingerprint(sfDir, Seq("embeddings")), cent)
     assignL2(n, cent)
       .groupBy("cluster")
       .agg(count(lit(1)).as("n_vecs"),
@@ -1126,17 +1111,13 @@ object Similarity {
   private def baseVecs(spark: SparkSession, sfDir: String): DataFrame =
     vecs(spark, sfDir).filter(col("vec_id") % 10 < 8)
 
-  /** Centroids trained on the BASE slice only — the
-    * [[trainedCentroids]] memo discipline (fingerprint-keyed driver
-    * values, O(k·d) doubles) with a distinct key suffix so the
-    * full-corpus entry and the base-slice entry never alias. */
-  private[graft] def maintCentroids(spark: SparkSession, sfDir: String): Seq[(Long, Seq[Double])] = {
-    val key = graft.sources.Tables.fingerprint(sfDir, Seq("embeddings")) + ":base"
-    centroidMemo.computeIfAbsent(key, _ => {
+  /** Centroids trained on the BASE slice only — a [[trainedCentroids]]
+    * twin under its own memo name. */
+  private[graft] val maintCentroids = FamilyIndex.value("maint-centroids", "embeddings") {
+    (spark, sfDir) =>
       // No persist — see [[trainedCentroids]] (r12).
       val n = baseVecs(spark, sfDir)
       lloydTrain(n, n.count())
-    })
   }
 
   /** Training-time cell histogram (cluster → base-member count) —
@@ -2096,34 +2077,23 @@ object Similarity {
     pqBestOn(col("v"), cent)
 
   /** PQ codebooks memoized per corpus, the [[trainedCentroids]]
-    * pattern: q158 (the training benchmark) always retrains and
-    * refreshes the memo; the ADC serving path (q160) reads it —
-    * trained once, served by the family, like a real index build.
-    * Fingerprint-keyed like [[centroidMemo]] (stale-corpus safety). */
-  private val codebookMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[Int, Seq[(Long, Seq[Double])]]]()
-
-  /** Touch every similarity-family trained-model memo (driver-value
-    * indexes: coarse centroids, base-slice centroids, PQ codebooks)
-    * so the bench's timed cells measure index SERVING — the
-    * [[graft.operators.Dedup.prebuildIndexes]] twin; the training
-    * benchmarks themselves (q77/q158) always retrain regardless. */
-  private[graft] def prebuildIndexes(spark: SparkSession, sfDir: String): Seq[String] = {
-    trainedCentroids(spark, sfDir)
-    maintCentroids(spark, sfDir)
-    trainedCodebooks(spark, sfDir)
-    ivfAssignIndex(spark, sfDir)
-    Seq("kmeans-centroids", "maint-centroids", "pq-codebooks", "ivf-assign")
-  }
-
-  private def trainedCodebooks(spark: SparkSession, sfDir: String): Map[Int, Seq[(Long, Seq[Double])]] = {
-    val key = graft.sources.Tables.fingerprint(sfDir, Seq("embeddings"))
-    codebookMemo.computeIfAbsent(key, _ => {
+    * pattern: the ADC serving path (q160) reads them — trained once,
+    * served by the family, like a real index build. */
+  private val trainedCodebooks = FamilyIndex.value("pq-codebooks", "embeddings") {
+    (spark, sfDir) =>
       // No persist — see [[trainedCentroids]] (r12).
       val n = vecs(spark, sfDir)
       pqTrain(pqSliced(n), n.count())
-    })
   }
+
+  /** Serve every similarity-family memo (coarse centroids, base-slice
+    * centroids, PQ codebooks, the IVF posting index) so the bench's
+    * timed cells measure index SERVING — the
+    * [[graft.operators.Dedup.prebuildIndexes]] twin; the training
+    * benchmarks themselves (q77/q158) always retrain regardless. */
+  private[graft] def prebuildIndexes(spark: SparkSession, sfDir: String): Seq[String] =
+    FamilyIndex.prebuild(spark, sfDir)(
+      trainedCentroids, maintCentroids, trainedCodebooks, ivfAssignIndex)
 
   /** Assign every (subspace, vector-slice) row to its nearest
     * codeword: a CASE over the subspace id selects that subspace's
@@ -2229,9 +2199,6 @@ object Similarity {
     val cnt = n.count()
     val sl = pqSliced(n)
     val cents = pqTrain(sl, cnt)
-    // refresh the served index with the identical deterministic value
-    // (the q77 → trainedCentroids discipline)
-    codebookMemo.put(graft.sources.Tables.fingerprint(sfDir, Seq("embeddings")), cents)
     pqAssign(sl, cents)
       .groupBy("subspace", "code")
       .agg(count(lit(1)).as("n_vecs"),

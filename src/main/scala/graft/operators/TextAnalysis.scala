@@ -1430,12 +1430,9 @@ object TextAnalysis {
     * ever contains a space. */
   def q167(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val merges = bpeTrain(spark, sfDir)
-    // Refresh the shared memo (q167 IS the training benchmark and
-    // always retrains — the q77/q158 centroid/codebook discipline);
-    // the encode path (q169) serves from it.
-    mergeMemo.put(Tables.fingerprint(sfDir, Seq("documents")), merges)
-    merges.toDF("round", "sym_a", "sym_b", "merged", "n_weighted")
+    // q167 IS the training benchmark and always retrains; the encode
+    // path (q169) serves the same table from `trainedMerges`.
+    bpeTrain(spark, sfDir).toDF("round", "sym_a", "sym_b", "merged", "n_weighted")
       .orderBy("round")
   }
 
@@ -1490,27 +1487,18 @@ object TextAnalysis {
 
   /** Trained BPE merge table memoized per corpus — the
     * [[graft.operators.Similarity]] trained-model discipline applied
-    * to the tokenizer: the TRAINING benchmark (q167) always retrains
-    * and refreshes this memo; the ENCODE path (q169) reads it, so
-    * serving cells measure encoding, not a retrain per query — how a
-    * production pipeline ships a tokenizer model. Fingerprint-keyed
-    * (stale-corpus safety), O(k) driver values (6 merge rows). */
-  private val mergeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String, String, String, Long)]]()
+    * to the tokenizer ([[graft.functions.FamilyIndex]] value kind):
+    * the ENCODE path (q169) reads it, so serving cells measure
+    * encoding, not a retrain per query — how a production pipeline
+    * ships a tokenizer model. O(k) driver values (6 merge rows). */
+  private[graft] val trainedMerges =
+    graft.functions.FamilyIndex.value("bpe-merges", "documents")(bpeTrain)
 
-  private[graft] def trainedMerges(spark: SparkSession, sfDir: String)
-      : Seq[(Long, String, String, String, Long)] = {
-    val key = Tables.fingerprint(sfDir, Seq("documents"))
-    mergeMemo.computeIfAbsent(key, _ => bpeTrain(spark, sfDir))
-  }
-
-  /** Touch the tokenizer-model memo so bench cells measure SERVING —
+  /** Serve the tokenizer-model memo so bench cells measure SERVING —
     * the [[graft.operators.Similarity.prebuildIndexes]] twin for the
     * text family. */
-  private[graft] def prebuildIndexes(spark: SparkSession, sfDir: String): Seq[String] = {
-    trainedMerges(spark, sfDir)
-    Seq("bpe-merges")
-  }
+  private[graft] def prebuildIndexes(spark: SparkSession, sfDir: String): Seq[String] =
+    graft.functions.FamilyIndex.prebuild(spark, sfDir)(trainedMerges)
 
   /** q169 — BPE corpus encoding (the APPLY half of the tokenizer loop
     * q167 trains): encode every token of every document with the
