@@ -12,11 +12,8 @@ import json, math, subprocess, sys, os, glob
 
 import duckdb
 
-FLAGS = set(a for a in sys.argv[1:] if a.startswith("--"))
-_POS = [a for a in sys.argv[1:] if not a.startswith("--")]
-SF_DIR = _POS[0] if len(_POS) > 0 else "/root/testdata/sf0.001"
-OUT_DIR = _POS[1] if len(_POS) > 1 else "/tmp/graft_verify"
-ONLY = _POS[2:]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CLASSPATH = "target/scala-2.13/classes:/opt/spark/jars/*"
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -32,13 +29,19 @@ for p in ["java.base/java.lang", "java.base/java.lang.invoke",
     ADD_OPENS += ["--add-opens", p + "=ALL-UNNAMED"]
 
 
-def run_verify():
-    cmd = (["java"] + ADD_OPENS +
-           ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-            "-Xmx8g", "-cp",
-            "target/scala-2.13/classes:/opt/spark/jars/*",
-            "graft.Verify", SF_DIR, OUT_DIR] + ONLY)
-    r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True)
+def java_cmd(main, args, xmx=None, cp=CLASSPATH):
+    """argv launching `main` with build.sbt's forked-JVM recipe: the
+    JDK 17 --add-opens set, UI off, UTC, and `-Xmx{xmx}` when given.
+    Run it with cwd=REPO (the classpath is relative)."""
+    return (["java"] + ADD_OPENS +
+            ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"] +
+            ([f"-Xmx{xmx}"] if xmx else []) +
+            ["-cp", cp, main] + list(args))
+
+
+def run_verify(sf_dir, out_dir, only):
+    cmd = java_cmd("graft.Verify", [sf_dir, out_dir] + only, xmx="8g")
+    r = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True)
     for line in r.stderr.splitlines():
         if "[verify]" in line or "Exception" in line:
             print(line)
@@ -118,10 +121,9 @@ def dec18_probe():
     bits = "\n".join(format(struct.unpack("<Q", struct.pack("<d", c))[0],
                             "016x") for c in cases)
     r = subprocess.run(
-        ["java", "-cp",
-         "target/scala-2.13/test-classes:target/scala-2.13/classes:"
-         "/opt/spark/jars/*", "graft.Dec18Probe"],
-        cwd="/root/repo", input=bits, capture_output=True, text=True)
+        java_cmd("graft.Dec18Probe", [],
+                 cp="target/scala-2.13/test-classes:" + CLASSPATH),
+        cwd=REPO, input=bits, capture_output=True, text=True)
     if r.returncode != 0:
         print("probe JVM failed (run `sbt Test/compile` first?)")
         print(r.stderr[-2000:])
@@ -155,11 +157,16 @@ def dec18_probe():
 
 
 def main():
-    if "--dec18-probe" in FLAGS:
+    flags = {a for a in sys.argv[1:] if a.startswith("--")}
+    pos = [a for a in sys.argv[1:] if not a.startswith("--")]
+    sf_dir = pos[0] if len(pos) > 0 else "/root/testdata/sf0.001"
+    out_dir = pos[1] if len(pos) > 1 else "/tmp/graft_verify"
+    only = pos[2:]
+    if "--dec18-probe" in flags:
         dec18_probe()
-    if "--skip-verify" not in FLAGS:
-        run_verify()
-    if "--verify-only" in FLAGS:
+    if "--skip-verify" not in flags:
+        run_verify(sf_dir, out_dir, only)
+    if "--verify-only" in flags:
         # sf1_gate splits the Spark dump (one process, full roster)
         # from the DuckDB replay (chunked fresh processes, so one
         # malloc-level death costs a chunk, not the sweep).
@@ -180,29 +187,29 @@ def main():
     # spill early and pass (q172 in 25 s). GRAFT_DUCK_MEM overrides
     # for triage; the sf1 gate's OOM retry goes DOWN (12GB), not up.
     con.execute(f"SET memory_limit='{os.environ.get('GRAFT_DUCK_MEM', '24GB')}'")
-    os.makedirs(f"{OUT_DIR}/.duck_tmp", exist_ok=True)
-    con.execute(f"SET temp_directory='{OUT_DIR}/.duck_tmp'")
+    os.makedirs(f"{out_dir}/.duck_tmp", exist_ok=True)
+    con.execute(f"SET temp_directory='{out_dir}/.duck_tmp'")
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
-    oracle = json.load(open(f"{OUT_DIR}/oracle_sql.json"))
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     # Iterate the REGISTERED roster, not the outDir listing: a query
     # that failed Spark-side leaves no output dir, and skipping it
     # would under-count failures (that blind spot hid 19 breakages
     # when the events fixture changed physical ts type).
-    reg_path = os.path.join(OUT_DIR, "_registered.json")
+    reg_path = os.path.join(out_dir, "_registered.json")
     if os.path.exists(reg_path):
         registered = json.load(open(reg_path))
     else:
         print("WARNING: no _registered.json in outDir (pre-roster Verify "
               "build or interrupted run) — Spark-side failures are "
               "UNDETECTABLE in this mode")
-        registered = sorted(n for n in os.listdir(OUT_DIR)
-                            if os.path.isdir(os.path.join(OUT_DIR, n)))
-    names = ONLY or registered
+        registered = sorted(n for n in os.listdir(out_dir)
+                            if os.path.isdir(os.path.join(out_dir, n)))
+    names = only or registered
     n_pass = n_fail = 0
     for name in names:
-        d = os.path.join(OUT_DIR, name)
+        d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
             print(f"FAIL {name}: no output dir (Spark-side failure)")
             n_fail += 1

@@ -38,6 +38,8 @@ import re
 import subprocess
 import sys
 
+from check import java_cmd
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 SF1 = os.path.join(HERE, "sf1")
@@ -185,22 +187,11 @@ def main():
     # -- bench sweep + per-cell decade ratios vs the sf0.1 reference --
     if not flag("skip-bench"):
         print("[sf1_gate] bench sweep ...", flush=True)
-        opens = []
-        for p in ["java.lang", "java.lang.invoke", "java.lang.reflect",
-                  "java.io", "java.net", "java.nio", "java.util",
-                  "java.util.concurrent", "java.util.concurrent.atomic",
-                  "sun.nio.ch", "sun.nio.cs", "sun.security.action",
-                  "sun.util.calendar"]:
-            opens.append(f"--add-opens=java.base/{p}=ALL-UNNAMED")
         env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF1)
         if ONLY:
             env["SPARK_GRAFT_ONLY"] = ",".join(ONLY)
-        rb = subprocess.run(
-            ["java"] + opens +
-            ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-             "-Xmx24g", "-cp", "target/scala-2.13/classes:/opt/spark/jars/*",
-             "graft.Bench"],
-            cwd=REPO, env=env, capture_output=True, text=True)
+        rb = subprocess.run(java_cmd("graft.Bench", [], xmx="24g"),
+                            cwd=REPO, env=env, capture_output=True, text=True)
         bench = {}
         for line in rb.stdout.splitlines():
             try:

@@ -269,10 +269,10 @@ object Dedup {
     * steady-state pre-build hook (Bench's q61 pre-create precedent: an
     * index is built once per corpus and SERVED; the timed cells
     * measure serving). The one-time build cost is timed per prebuild
-    * call by perfbench's `memo_build_s`; DevProbe's r1−r2 gap shows
-    * relation builds only, since its clearCache self-heal never
-    * rebuilds a driver value. Returns the memo names, for the bench's
-    * log line. */
+    * call by perfbench's `memo_build_s`, and per query by DevProbe's
+    * r1−r2 gap (it releases every memo, relations and driver values
+    * alike, before r1). Returns the memo names, for the bench's log
+    * line. */
   private[graft] def prebuildIndexes(spark: SparkSession, sfDir: String): Seq[String] =
     FamilyIndex.prebuild(spark, sfDir)(minhashSig, minhashCandidates, ccLabels,
       overlapPairs, ssjoinUniverse, ssjoinPrefix, ssjoinDocSigs, shingleDocSigs, spanDup)
