@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Layer A — the blow-equivalent typed pipeline facade (SURVEY.md
@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions.col
   *
   *  - `GeneratorSource` (`/root/reference/maps/maps.go:39-49`) —
   *    wrap a finite generator into a record stream → here a
-  *    `Dataset` built from a range or local seq (lazy plan, not a
-  *    live channel; Spark's scheduler replaces the goroutine pump).
+  *    `Dataset` built from a range or parallelized seq (lazy plan, not
+  *    a live channel; Spark's scheduler replaces the goroutine pump).
   *  - `MapLocal(m)` (`maps/maps.go:56-68`) — single-lane flatMap →
   *    `Dataset.flatMap`. Parallelism is a non-semantic detail in the
   *    reference (one goroutine); Spark runs it data-parallel, which
@@ -37,7 +37,11 @@ import org.apache.spark.sql.functions.col
   *
   * 100 TB notes: every combinator is a narrow transformation except
   * `mapLocalParallel`, whose single hash repartition is exactly the
-  * reference's lane routing; nothing materializes on the driver.
+  * reference's lane routing; nothing materializes on the driver. A
+  * driver-side `Seq` enters the plan as an RDD reference, never as its
+  * rows: a `LocalRelation` leaf would make every analyzer and
+  * optimizer rule of every query over it map over every row, so
+  * planning would cost rows × rules instead of a constant.
   */
 final class Pipeline[T](val ds: Dataset[T]) extends Serializable {
 
@@ -72,8 +76,14 @@ final class Pipeline[T](val ds: Dataset[T]) extends Serializable {
     * the action that runs the pipeline. */
   def sink(): Unit = ds.foreach(_ => ())
 
-  /** Counted drain — sink plus observability, used by tests/bench. */
-  def sinkCount(): Long = ds.count()
+  /** Counted drain — sink plus observability, used by tests/bench.
+    * One pass, per-partition counts, no aggregate exchange: the
+    * partition counts are summed on the driver, so a routed pipeline
+    * runs one job fewer than `ds.count()`. Every record is still
+    * drained (Catalyst cannot prune a flatMap either way). */
+  def sinkCount(): Long =
+    ds.mapPartitions(it => Iterator.single(it.size.toLong))(Encoders.scalaLong)
+      .collect().sum
 
   /** Write the stream as parquet — the useful sink the reference
     * lacks (its only outputs are side effects). */
@@ -84,15 +94,19 @@ final class Pipeline[T](val ds: Dataset[T]) extends Serializable {
 object Pipeline {
 
   /** A finite generator as a source (`GeneratorSource`,
-    * `maps/maps.go:39-49`): materialized as a distributed range /
-    * parallelized seq, not a driver-side channel. */
-  def generatorSource[T: Encoder](spark: SparkSession, data: Seq[T]): Pipeline[T] =
-    new Pipeline(spark.createDataset(data))
+    * `maps/maps.go:39-49`): a parallelized seq, not a driver-side
+    * channel. The plan's leaf holds a reference to the parallelized
+    * RDD, not the rows, so planning cost does not grow with `data`.
+    * Not persisted: task retry recomputes a lost partition from it. */
+  def generatorSource[T: Encoder](spark: SparkSession, data: Seq[T]): Pipeline[T] = {
+    val enc = implicitly[Encoder[T]]
+    new Pipeline(spark.createDataset(spark.sparkContext.parallelize(data)(enc.clsTag)))
+  }
 
   /** Range generator — the shape of the reference's `FizzGenerator`
     * (`cmd/fizzbuzz/fizzbuzz.go:11-17`: emit 0 until n). */
   def rangeSource(spark: SparkSession, n: Long): Pipeline[java.lang.Long] =
-    new Pipeline(spark.range(n).as(org.apache.spark.sql.Encoders.LONG))
+    new Pipeline(spark.range(n).as(Encoders.LONG))
 
   def fromDataset[T](ds: Dataset[T]): Pipeline[T] = new Pipeline(ds)
 }

@@ -223,7 +223,6 @@ class FamilyIndexSpec extends AnyFunSuite {
   }
 
   test("prebuild serves all 14 memos, is free the second time, and leaves no build intermediate") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     def prebuild(): Seq[String] =
       graft.operators.Dedup.prebuildIndexes(spark, sf) ++
@@ -247,32 +246,9 @@ class FamilyIndexSpec extends AnyFunSuite {
     assert(newMat === 10, "expected the 10 relation memos materialized")
     assert(sc.getPersistentRDDs.size - rdds0 === newMat,
       "a build intermediate outlived its memo build")
-    // A second prebuild serves every memo: no Spark job at all. The
-    // listener bus is async, so jobs are bracketed by two fence jobs.
-    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        groups.put(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    def fence(tag: String): Seq[String] = {
-      sc.setJobGroup(tag, tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val before = Seq.newBuilder[String]
-      var g = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      while (g != tag) {
-        assert(g != null, s"fence job $tag never reached the listener")
-        before += g
-        g = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      before.result()
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence("spec-prebuild-open")
-      assert(prebuild() === names)
-      val jobs = fence("spec-prebuild-close")
-      assert(jobs.isEmpty, s"the second prebuild ran ${jobs.size} Spark job(s)")
-    } finally sc.removeSparkListener(listener)
+    // A second prebuild serves every memo: no Spark job at all.
+    val (again, jobs) = JobFence(sc)(prebuild())
+    assert(again === names)
+    assert(jobs === 0, s"the second prebuild ran $jobs Spark job(s)")
   }
 }

@@ -88,6 +88,41 @@ class PipelineSpec extends AnyFunSuite {
     assert(Pipeline.rangeSource(spark, 10000L).sinkCount() === 10000L)
   }
 
+  test("generatorSource keeps its rows out of the plan") {
+    // A LocalRelation leaf would carry all 100,000 rows through every
+    // analyzer and optimizer rule of every query built on the source.
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.ExternalRDD
+    val plan = Pipeline.generatorSource(spark, (0 until 100000).map(FizzyInput))
+      .mapLocal(FizzMapper.apply).ds.queryExecution.analyzed
+    assert(plan.collect { case l: LocalRelation => l }.isEmpty,
+      "the source's rows are inlined in the plan")
+    assert(plan.collect { case r: ExternalRDD[_] => r }.size === 1)
+  }
+
+  test("routed sinkCount runs one job fewer than count() and agrees with it") {
+    val routed = Pipeline.generatorSource(spark, (0 until 1000).map(FizzyInput))
+      .mapLocalParallel(FizzMapper.apply, 4)(_.key)
+    val (counted, sinkJobs) = JobFence(spark.sparkContext)(routed.sinkCount())
+    val (plain, countJobs) = JobFence(spark.sparkContext)(routed.ds.count())
+    assert(counted === 1000L)
+    assert(counted === plain)
+    assert(sinkJobs === countJobs - 1, s"sinkCount ran $sinkJobs job(s), count() ran $countJobs")
+  }
+
+  test("degenerate sources: empty and single-record inputs drain through every sink") {
+    for (in <- Seq(Seq.empty[FizzyInput], Seq(FizzyInput(15)))) {
+      val seen = spark.sparkContext.longAccumulator
+      Pipeline.generatorSource(spark, in)
+        .mapLocal { x: FizzyInput => seen.add(1); FizzMapper(x) }
+        .sink()
+      assert(seen.value === in.size.toLong)
+      assert(Pipeline.generatorSource(spark, in)
+        .mapLocalParallel(FizzMapper.apply, lanes = 4)(_.key)
+        .sinkCount() === in.size.toLong)
+    }
+  }
+
   test("sinkParquet round-trips records") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
     Pipeline.generatorSource(spark, (1 to 50).map(FizzyInput))

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (guide: one
@@ -29,5 +33,37 @@ object SparkTestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+}
+
+/** Runs `body` and returns its value with the number of Spark jobs it
+  * started. The listener bus is async, so those jobs are bracketed by
+  * two fence jobs: every job the listener sees between them ran inside
+  * `body`. */
+object JobFence {
+  def apply[A](sc: SparkContext)(body: => A): (A, Int) = {
+    val groups = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.put(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def fence(tag: String): Int = {
+      sc.setJobGroup(tag, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      var (before, g) = (0, groups.poll(60, TimeUnit.SECONDS))
+      while (g != tag) {
+        assert(g != null, s"fence job $tag never reached the listener")
+        before += 1
+        g = groups.poll(60, TimeUnit.SECONDS)
+      }
+      before
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("job-fence-open")
+      val a = body
+      (a, fence("job-fence-close"))
+    } finally sc.removeSparkListener(listener)
   }
 }
